@@ -246,38 +246,88 @@ object GraphOps {
     * broadcast into the |E| relation (no shuffle, but the state must fit
     * on the driver); above it the state goes through a shuffled hash join
     * against the node-partitioned edge relation instead — the 100 TB
-    * regime, where |V| outgrows any broadcast. [[stateHint]] makes the
-    * choice when the caller knows |V|.
+    * regime, where |V| outgrows any broadcast.
     */
   val StateBroadcastMaxRows = 2000000L
 
-  /** Size-driven broadcast decision for iteration state (SURVEY §5). */
-  def stateHint(stateRows: Long): Boolean = stateRows <= StateBroadcastMaxRows
-
-  /** Session kill-switch for state broadcasts — `spark.graft
-    * .stateBroadcast=false` forces every [[stateJoin]] onto the
-    * shuffled-hash path regardless of the size hint. Exists so the
-    * plan-shape spec (ScalePlanSpec) can assert the non-broadcast plans
-    * are real, and so a cluster operator can disable driver-side state
-    * collection wholesale without recompiling.
+  /** THE broadcast decision for iteration state (SURVEY §5), made once
+    * per operator from the |V| it counted: broadcast while the state fits
+    * under [[StateBroadcastMaxRows]] and the session allows it.
+    * `spark.graft.stateBroadcast=false` turns every state broadcast off —
+    * so the plan-shape spec (ScalePlanSpec) can assert the non-broadcast
+    * plans are real, and so a cluster operator can disable driver-side
+    * state collection without recompiling. Everything that depends on
+    * the regime reads this one value: every [[stateJoin]] and
+    * [[pagerank]]'s `norm` partitioning key.
     */
-  def stateBroadcastAllowed(s: SparkSession): Boolean =
-    s.conf.get("spark.graft.stateBroadcast", "true").toBoolean
+  private def broadcastState(s: SparkSession, stateRows: Long): Boolean =
+    stateRows <= StateBroadcastMaxRows &&
+      s.conf.get("spark.graft.stateBroadcast", "true").toBoolean
 
-  /** The per-round state side of an iterative join: broadcast when the
-    * state fits (bench SFs and up to ~100x), a shuffled hash join build
-    * side when it doesn't. On the non-broadcast path the |E| side is
-    * currently re-exchanged each round as well: an AQE localCheckpoint
-    * reports UnknownPartitioning, so [[iterRelation]]'s node-key
-    * partitioning is not visible to the planner and the shuffled hash
-    * join exchanges both sides. Until a partitioning-preserving
-    * materialization exists (reliable checkpoint() on a cluster keeps the
-    * partitioning), the knob bounds DRIVER memory (no |V|-row broadcast
-    * build), not the per-round shuffle volume.
+  /** The per-round state side of an iterative join, as
+    * [[broadcastState]] decided: a broadcast, or a shuffled hash join
+    * build side. On the non-broadcast path the |E| side is currently
+    * re-exchanged each round as well: an AQE localCheckpoint reports
+    * UnknownPartitioning, so [[iterRelation]]'s node-key partitioning is
+    * not visible to the planner and the shuffled hash join exchanges both
+    * sides. Until a partitioning-preserving materialization exists
+    * (reliable checkpoint() on a cluster keeps the partitioning), the
+    * knob bounds DRIVER memory (no |V|-row broadcast build), not the
+    * per-round shuffle volume.
     */
   private def stateJoin(state: DataFrame, bcast: Boolean): DataFrame =
-    if (bcast && stateBroadcastAllowed(state.sparkSession)) broadcast(state)
-    else state.hint("shuffle_hash")
+    if (bcast) broadcast(state) else state.hint("shuffle_hash")
+
+  /** The shared loop of the iterative graph operators: a state relation
+    * rewritten round by round (RaSQL's and Pregelix's fixpoint over a
+    * state relation joined with the edge relation).
+    */
+  private[graft] object Fixpoint {
+
+    /** Runs rounds 1..`bound` of `step` from `init` and returns the final
+      * state with the number of rounds run. `step(state, r)` builds round
+      * r from the previous round's state; `.ckpt` truncates round r's
+      * lineage when `ckptAt(r)` (checkpoints are lazy, so each
+      * materializes inside the next action that reads it). `done` reads
+      * the state after each round BELOW the bound and `true` stops the
+      * loop: at the bound the loop ends anyway, so a convergence probe
+      * there would be a pure job barrier and is never run.
+      */
+    def run(init: DataFrame, bound: Int, ckptAt: Int => Boolean = _ => true)(
+        step: (DataFrame, Int) => DataFrame)(
+        done: DataFrame => Boolean = _ => false): (DataFrame, Int) = {
+      @scala.annotation.tailrec
+      def go(state: DataFrame, r: Int): (DataFrame, Int) =
+        if (r > bound) (state, r - 1)
+        else {
+          val next = step(state, r)
+          val st = if (ckptAt(r)) next.ckpt else next
+          if (r < bound && done(st)) (st, r) else go(st, r + 1)
+        }
+      go(init, 1)
+    }
+
+    /** A `done` for a state whose per-column `metric` can only grow: it
+      * stops once the metric is unchanged from the previous round (a
+      * fixed point — every later round is a no-op, matching the oracle's
+      * statically unrolled trailing rounds). A DECREASE in any column is
+      * evidence the monotonicity argument no longer holds (e.g. a wrapped
+      * Long), so it turns early exit off for good and the loop runs to
+      * its bound. `init`'s metric is read when the `done` is built.
+      */
+    def monotone(init: DataFrame)(
+        metric: DataFrame => Seq[java.math.BigDecimal]): DataFrame => Boolean = {
+      var prev = metric(init)
+      var sound = true
+      state => {
+        val m = metric(state)
+        if (m.zip(prev).exists { case (a, b) => a.compareTo(b) < 0 }) sound = false
+        val fixed = sound && m == prev
+        prev = m
+        fixed
+      }
+    }
+  }
 
   /** Degree + weighted degree per node. */
   def degrees(und: DataFrame): DataFrame = {
@@ -294,8 +344,7 @@ object GraphOps {
     *
     * `u` must be an [[iterRelation]] (materialized, node-partitioned).
     */
-  def pagerank(u: DataFrame, iters: Int = PrIters,
-      stateBroadcast: Boolean = true): DataFrame = {
+  def pagerank(u: DataFrame, iters: Int = PrIters): DataFrame = {
     val s = u.sparkSession
     import s.implicits._
     // one partition-local aggregation doubles as the node list (every
@@ -311,64 +360,48 @@ object GraphOps {
     // broadcast decision below — folding it into the plan as a scalar
     // aggregate would instead re-broadcast a 1-row relation every round.
     val n = wdeg.count()
-    val bcast = stateBroadcast && stateHint(n)
+    val bcast = broadcastState(s, n)
     // wdeg is |V| rows: broadcast it explicitly — size estimation over a
     // checkpoint+agg is too conservative to trigger the auto-broadcast,
     // and the sort-merge fallback shuffles the full |E| relation once per
     // query (measured 2.2s vs 1.0s for this step at sf0.1). norm is
-    // CACHED with its partitioning key chosen by the state regime — the
-    // cache keeps the HashPartitioning visible to the planner (see
-    // iterRelation), and the key decides WHICH per-round exchange is
-    // elided:
+    // CACHED with its partitioning key chosen by the same `bcast` that
+    // routes the state joins — the cache keeps the HashPartitioning
+    // visible to the planner (see iterRelation), and the key decides
+    // WHICH per-round exchange is elided:
     //  - broadcast state (bench SFs): partition by dst, the PER-ROUND
     //    AGGREGATION key — the broadcast join preserves it, so each
     //    round's contrib aggregation fuses partial+final into the scan
     //    stage with no exchange at all.
-    //  - shuffled state (100 TB, |V| outgrows a broadcast): partition by
+    //  - shuffled state (100 TB, |V| outgrows a broadcast — or the session
+    //    turns state broadcasts off): partition by
     //    src, the PER-ROUND JOIN key — the shuffled hash join then
     //    exchanges ONLY the |V|-row state side, and the dst aggregation
     //    pays a map-side-combined ~|V|-row partial exchange. Keying by
     //    dst here instead re-exchanged the full |E| relation every round
-    //    (NbProbe: 208.6 MB written over 10 rounds vs 68.7 MB after this
-    //    fix; the broadcast path writes 38.6 MB).
+    //    (measured at sf0.1: 208.6 MB shuffle written over 10 rounds vs
+    //    68.7 MB keyed by src; the broadcast path writes 38.6 MB).
     // The cache materializes under round 1 and is read as columnar blocks
     // by every later round.
     val norm = u.join(stateJoin(wdeg, bcast), "node")
       .select($"node".as("src"), $"nb".as("dst"), ($"weight" / $"wd").as("p"))
       .repartition(if (bcast) $"dst" else $"src")
       .persist()
-    // localCheckpoint after every round: persist alone leaves the
-    // analyzed plan growing one join+agg deeper per iteration, and
-    // Catalyst re-analysis comes to dominate (measured 1.5s → 12s per
-    // round by iteration 10). Checkpointing truncates lineage so every
-    // round costs the same. LAZY (eager = false): each round's state then
-    // materializes inside the NEXT round's broadcast-build job instead of
-    // paying its own job-scheduling barrier — the barrier count per round
-    // drops from 2 to 1 (measured 3.8s → 2.6s for the full query at
-    // sf0.1). On a real cluster use reliable checkpoint() to HDFS/S3
-    // instead (survives executor loss).
-    var ranks = wdeg.select($"node", (lit(1.0) / n).as("r")).ckpt
-    for (i <- 1 to iters) {
-      // ranks is |V| rows (tiny next to |E|): broadcast it so the cached
-      // edge relation streams through a broadcast-hash join each round
-      // instead of re-shuffling — the map-side partial sum then shrinks
-      // the shuffle to |V| rows. At 100 TB scale |V| may outgrow a
-      // broadcast; pass stateBroadcast = false to keep both sides
-      // hash-partitioned on the node key instead (see [[stateJoin]]).
-      val contribs = norm.join(stateJoin(ranks.withColumnRenamed("node", "src0"), bcast), $"src" === $"src0")
-        .groupBy($"dst").agg(sum($"r" * $"p").as("contrib"))
+    // Lineage truncation (measured 1.5s → 12s per round by iteration 10
+    // without it): ranks is consumed exactly ONCE per round (the state
+    // join), so checkpointing every 2nd round and the last halves the
+    // materializations without any recomputation; analysis depth stays
+    // bounded at two rounds.
+    val ranks0 = wdeg.select($"node", (lit(1.0) / n).as("r")).ckpt
+    Fixpoint.run(ranks0, iters, i => i % 2 == 0 || i == iters) { (ranks, _) =>
       // in an undirected graph every node has an in-edge, so contribs
       // already covers all nodes — no left-join back to the node list
       // (the oracle's LEFT JOIN produces the same rows).
-      val next = contribs
+      norm.join(stateJoin(ranks.withColumnRenamed("node", "src0"), bcast), $"src" === $"src0")
+        .groupBy($"dst").agg(sum($"r" * $"p").as("contrib"))
         .select($"dst".as("node"),
           (lit(Rest) / n + lit(Damping) * $"contrib").as("r"))
-      // ranks is consumed exactly ONCE per round (the state broadcast), so
-      // checkpointing every 2nd round halves the materializations without
-      // any recomputation; analysis depth stays bounded at two rounds.
-      ranks = if (i % 2 == 0 || i == iters) next.ckpt else next
-    }
-    ranks
+    }()._1
   }
 
   /** Rounds between eigenvector normalize+checkpoint barriers — see
@@ -410,16 +443,36 @@ object GraphOps {
     * beyond λ ≈ 2.4e6, normalize every round (EvNormEvery = 1 bounds
     * terms at (1+λ)² → λ ≈ 1.5e13).
     */
-  def eigenvector(u: DataFrame, iters: Int = PrIters,
-      stateBroadcast: Boolean = true): DataFrame = {
+  def eigenvector(u: DataFrame, iters: Int = PrIters): DataFrame = {
     val s = u.sparkSession
     import s.implicits._
     import org.apache.spark.sql.types.DecimalType
     val nodes = u.select($"node").distinct().ckpt
     val n = nodes.count()
-    val bcast = stateBroadcast && stateHint(n) // see pagerank
-    var x = nodes.select($"node", (lit(1.0) / n).as("x")).ckpt
-    for (i <- 1 to iters) {
+    val bcast = broadcastState(s, n)
+    // Checkpoint raw BEFORE the norm: otherwise the |E|-sized join runs
+    // twice (once under the norm aggregate, once under the next
+    // consumer). The checkpoint is LOAD-BEARING: a fully lazy broadcast
+    // chain was re-measured at 1032 jobs / 110s — AQE re-executes the
+    // entire prior chain inside every later broadcast build instead of
+    // reusing it, so each norm round must leave materialized blocks.
+    val normAt = (i: Int) => i > 0 && (i % EvNormEvery == 0 || i == iters)
+    // The L2 norm is an UNPARTITIONED window aggregate: the |V|-row raw
+    // relation collapses to one partition inside the same job — no 1-row
+    // broadcast build per round. The decimal-exact sum is
+    // order-independent, so the value is bit-identical to the oracle's
+    // scalar subquery. The normalized x stays UNcheckpointed: the next
+    // round consumes it through ONE reused broadcast, so the projection
+    // re-evaluates once — a |V|-row scan, cheaper than another barrier.
+    def normalize(rawM: DataFrame): DataFrame = {
+      val all = org.apache.spark.sql.expressions.Window
+        .partitionBy().rowsBetween(Long.MinValue, Long.MaxValue)
+      val nr = sqrt(sum(($"x" * $"x").cast(DecimalType(38, 12))).over(all).cast("double"))
+      rawM.select($"node", ($"x" / nr).as("x"))
+    }
+    val x0 = nodes.select($"node", (lit(1.0) / n).as("x")).ckpt
+    val (raw, rounds) = Fixpoint.run(x0, iters, normAt) { (prev, i) =>
+      val x = if (normAt(i - 1)) normalize(prev) else prev
       // ONE renamed copy of x feeds BOTH joins this round: the two
       // broadcast exchanges then canonicalize identically, so the
       // physical planner's ReuseExchange builds the x broadcast once.
@@ -429,31 +482,10 @@ object GraphOps {
       // the (A+I) self term rides the SAME broadcast as the neighbor join
       // (|V|-row probe, ~free); a union/self-loop fold was re-measured
       // slower — it forces an extra edge-build materialization.
-      val raw = contribs.join(stateJoin(x2, bcast), $"node" === $"nb0")
+      contribs.join(stateJoin(x2, bcast), $"node" === $"nb0")
         .select($"node", ($"x" + $"c").as("x"))
-      x = if (i % EvNormEvery == 0 || i == iters) {
-        // checkpoint raw BEFORE the norm: otherwise the |E|-sized join
-        // above runs twice (once under the norm aggregate, once under the
-        // next consumer). The L2 norm is an UNPARTITIONED window
-        // aggregate: the |V|-row raw relation collapses to one partition
-        // inside the same job — no 1-row broadcast build per round. The
-        // decimal-exact sum is order-independent, so the value is
-        // bit-identical to the oracle's scalar subquery.
-        // the checkpoint is LOAD-BEARING: a fully lazy broadcast chain was
-        // re-measured at 1032 jobs / 110s — AQE re-executes the entire
-        // prior chain inside every later broadcast build instead of
-        // reusing it, so each round must leave materialized blocks behind.
-        val rawM = raw.ckpt
-        val all = org.apache.spark.sql.expressions.Window
-          .partitionBy().rowsBetween(Long.MinValue, Long.MaxValue)
-        val nr = sqrt(sum(($"x" * $"x").cast(DecimalType(38, 12))).over(all).cast("double"))
-        // x stays UNcheckpointed: rawM is materialized blocks and the next
-        // round consumes x through ONE reused broadcast, so the projection
-        // re-evaluates once — a |V|-row scan, cheaper than another barrier.
-        rawM.select($"node", ($"x" / nr).as("x"))
-      } else raw
-    }
-    x
+    }()
+    if (normAt(rounds)) normalize(raw) else raw
   }
 
   /** Unchecked min-label rounds before the first convergence count — see
@@ -476,10 +508,12 @@ object GraphOps {
     * dd_clusters' near-dup chains) still get the exact fixpoint.
     */
   def components(u: DataFrame, maxIters: Int = 20,
-      uncheckedRounds: Int = CcUncheckedRounds,
-      stateBroadcast: Boolean = true): DataFrame = {
+      uncheckedRounds: Int = CcUncheckedRounds): DataFrame = {
     val s = u.sparkSession
     import s.implicits._
+    // |V| is never counted here (it would cost a job per call), so only
+    // the session conf decides
+    val bcast = broadcastState(s, 0L)
     // lazy localCheckpoint per round truncates lineage (see pagerank)
     var lbls = u.select($"node").distinct()
       .select($"node", $"node".as("lbl")).ckpt
@@ -493,9 +527,9 @@ object GraphOps {
     // the undirected relation, so the neighbor aggregate covers all nodes.
     def step(l: DataFrame): DataFrame = {
       val l2 = l.withColumnRenamed("node", "nb0")
-      u.join(stateJoin(l2, stateBroadcast), $"nb" === $"nb0")
+      u.join(stateJoin(l2, bcast), $"nb" === $"nb0")
         .groupBy($"node").agg(min($"lbl").as("nl"))
-        .join(stateJoin(l2, stateBroadcast), $"node" === $"nb0")
+        .join(stateJoin(l2, bcast), $"node" === $"nb0")
         .select($"node", least($"nl", $"lbl").as("lbl"))
         .ckpt
     }
@@ -507,9 +541,9 @@ object GraphOps {
     // checked round (its own job-scheduling barrier) is gone.
     def stepChecked(l: DataFrame): (DataFrame, Long) = {
       val l2 = l.withColumnRenamed("node", "nb0")
-      val nw = u.join(stateJoin(l2, stateBroadcast), $"nb" === $"nb0")
+      val nw = u.join(stateJoin(l2, bcast), $"nb" === $"nb0")
         .groupBy($"node").agg(min($"lbl").as("nl"))
-        .join(stateJoin(l2, stateBroadcast), $"node" === $"nb0")
+        .join(stateJoin(l2, bcast), $"node" === $"nb0")
         .select($"node", least($"nl", $"lbl").as("lbl"), $"lbl".as("old"))
         .ckpt
       (nw.select($"node", $"lbl"), nw.filter($"lbl" =!= $"old").count())
@@ -518,7 +552,7 @@ object GraphOps {
     // routed through the same size knob as the state joins (at 100 TB a
     // |V|-row broadcast build would OOM the driver here too)
     def diff(a: DataFrame, b: DataFrame): Long =
-      a.join(stateJoin(b.withColumnRenamed("lbl", "old"), stateBroadcast), "node")
+      a.join(stateJoin(b.withColumnRenamed("lbl", "old"), bcast), "node")
         .filter($"lbl" =!= $"old").count()
     var prev: DataFrame = null
     var i = 0
@@ -600,8 +634,7 @@ object GraphOps {
       (ks.map(i => when($"node" === lmkIds(i), 0).cast("int").as(s"d$i")) ++
         (if (sigma) ks.map(i => when($"node" === lmkIds(i), 1L).as(s"s$i")) else Nil) :+
         ks.map(i => $"node" === lmkIds(i)).reduce(_ || _).as("fr")): _*)
-    var state = init.ckpt
-    for (r <- 1 to rounds) {
+    Fixpoint.run(init.ckpt, rounds) { (state, r) =>
       // only the previous round's frontier joins the edge relation: a
       // node's min distance is final the round it is first reached
       val frontier = state.filter($"fr")
@@ -616,14 +649,12 @@ object GraphOps {
       val cand = u.join(stateJoin(frontier, bcast), $"nb" === $"nb0")
         .groupBy($"node").agg(aggs.head, aggs.tail: _*)
       // merge: already-reached distances are final; newly reached get d=r
-      state = state.join(stateJoin(cand, bcast), Seq("node"), "left")
+      state.join(stateJoin(cand, bcast), Seq("node"), "left")
         .select($"node" +:
           (ks.map(i => coalesce(d(i), when(col(s"c$i").isNotNull, r)).as(s"d$i")) ++
             (if (sigma) ks.map(i => coalesce(sg(i), col(s"c$i")).as(s"s$i")) else Nil) :+
             ks.map(i => d(i).isNull && col(s"c$i").isNotNull).reduce(_ || _).as("fr")): _*)
-        .ckpt
-    }
-    state.drop("fr")
+    }()._1.drop("fr")
   }
 
   /** The max-degree landmark seed: the K highest-degree nodes (degree
@@ -662,13 +693,12 @@ object GraphOps {
     * broadcast the size-driven [[stateJoin]] knob shifts every state join
     * to a shuffled hash join against the node-partitioned edge relation.
     */
-  def closeness(u: DataFrame, k: Int = ClLandmarks, rounds: Int = ClRounds,
-      stateBroadcast: Boolean = true): DataFrame = {
+  def closeness(u: DataFrame, k: Int = ClLandmarks, rounds: Int = ClRounds): DataFrame = {
     val s = u.sparkSession
     import s.implicits._
     // lazy: materializes under the count() (see betweenness)
     val nodes = u.select($"node").distinct().ckpt
-    val bcast = stateBroadcast && stateHint(nodes.count())
+    val bcast = broadcastState(s, nodes.count())
     val lmkIds = landmarkSeed(u, k)
     val state = landmarkBfs(u, nodes, lmkIds, rounds, sigma = false, bcast)
     // closeness(v) = K / Σ_i min(dist(v, lmk_i), rounds+1): exact integer
@@ -704,15 +734,14 @@ object GraphOps {
     * δ aggregation routes through decimal casts (Portable.dsum) so the
     * DuckDB oracle twin hash-matches despite double non-associativity.
     */
-  def betweenness(u: DataFrame, k: Int = BwLandmarks, rounds: Int = BwRounds,
-      stateBroadcast: Boolean = true): DataFrame = {
+  def betweenness(u: DataFrame, k: Int = BwLandmarks, rounds: Int = BwRounds): DataFrame = {
     val s = u.sparkSession
     import s.implicits._
     import org.apache.spark.sql.types.DecimalType
     // lazy: materializes under the count() below; the landmark top-K and
     // every later reader then ride the blocks
     val nodes = u.select($"node").distinct().ckpt
-    val bcast = stateBroadcast && stateHint(nodes.count())
+    val bcast = broadcastState(s, nodes.count())
     val lmkIds = landmarkSeed(u, k)
     val ks = lmkIds.indices
     // forward: columnar BFS with exact BIGINT σ path counts per landmark
@@ -739,15 +768,19 @@ object GraphOps {
       // 80 MB vs 18 MB total and +0.9s, far more than the four |V|-row
       // level exchanges it saved
       .ckpt
-    // backward: deepest level seeds δ = 0; each earlier level joins ONLY
-    // the level above it (DAG edges cross adjacent levels), with δ per
-    // landmark in columns pd0..pd{K-1} (null = no dependency at this level)
-    var prev = state.filter(ks.map(i => col(s"d$i") === rounds).reduce(_ || _))
+    // backward: deepest level seeds δ = 0; round j walks level
+    // rounds - j, joining ONLY the level above it (DAG edges cross
+    // adjacent levels), with δ per landmark in columns pd0..pd{K-1}
+    // (null = no dependency at this level). Every level's state stays in
+    // `levels` for the final score.
+    val deepest = state.filter(ks.map(i => col(s"d$i") === rounds).reduce(_ || _))
       .select($"node" +: ks.map(i =>
         when(col(s"d$i") === rounds, lit(0.0)).as(s"pd$i")): _*)
       .ckpt
-    val levels = scala.collection.mutable.ArrayBuffer(prev)
-    for (r <- (rounds - 1) to 0 by -1) {
+    val levels = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    val (top, _) = Fixpoint.run(deepest, rounds) { (prev, j) =>
+      levels += prev
+      val r = rounds - j
       // the per-edge term is pre-rounded with the portable prnd before
       // the exact decimal sum: casting a RAW double to decimal(·,9)
       // rounds by shortest-decimal-repr in Spark but by binary value in
@@ -758,17 +791,14 @@ object GraphOps {
       val aggs = ks.map(i => P.dsum(when(col(s"lv$i") === r,
         P.prnd(col(s"rt$i") * (lit(1.0) + coalesce(col(s"w_pd$i"), lit(0.0))), 9)), 9)
         .as(s"pd$i"))
-      val lvl = dag.filter(ks.map(i => col(s"lv$i") === r).reduce(_ || _))
+      dag.filter(ks.map(i => col(s"lv$i") === r).reduce(_ || _))
         .join(stateJoin(prev.select($"node".as("w2") +:
           ks.map(i => col(s"pd$i").as(s"w_pd$i")): _*), bcast), $"w" === $"w2", "left")
         .groupBy($"v")
         .agg(aggs.head, aggs.tail: _*)
         .withColumnRenamed("v", "node")
-        .ckpt
-      levels += lvl
-      prev = lvl
-    }
-    val delta = levels.reduce(_ union _)
+    }()
+    val delta = (levels += top).reduce(_ union _)
     // final per-node score: Σ over landmarks and levels of δ, through the
     // SAME exact decimal(18,9) arithmetic as the row-based multiset sum
     // (per-column decimal sums added as decimals, ONE final cast to
@@ -812,17 +842,14 @@ object GraphOps {
       (ks.map(i => when($"node" === lmkIds(i), 0L).as(s"d$i")) ++
         ks.map(i => ($"node" === lmkIds(i)).as(s"g$i")) :+
         ks.map(i => $"node" === lmkIds(i)).reduce(_ || _).as("ga")): _*)
-    var state = init.ckpt
-    // convergence short-circuit (r14 verdict item 6): an empty frontier
-    // is a FIXED POINT — no distance improved this round, so every later
-    // round relaxes nothing and the oracle's statically-unrolled
-    // trailing rounds are no-ops. The count per round is one cheap
-    // aggregate on state the next round's join would materialize anyway
-    // (the components fixpoint-probe discipline).
-    var round = 0
-    var active = 1L
-    while (round < rounds && active > 0) {
-      round += 1
+    // convergence short-circuit: an empty frontier is a FIXED POINT — no
+    // distance improved this round, so every later round relaxes nothing
+    // and the oracle's statically-unrolled trailing rounds are no-ops.
+    // The count is one cheap aggregate on state the next round's join
+    // would materialize anyway. After the bound round the final state
+    // materializes inside its first consumer's job (closeness_w's output
+    // scan / betweenness_w's sv broadcast build).
+    val (dists, round) = Fixpoint.run(init.ckpt, rounds) { (state, _) =>
       val frontier = state.filter($"ga")
         .select($"node".as("nb0") +:
           ks.flatMap(i => Seq(d(i).as(s"fd$i"), g(i).as(s"fg$i"))): _*)
@@ -832,7 +859,7 @@ object GraphOps {
         .groupBy($"node").agg(aggs.head, aggs.tail: _*)
       // merge: keep the smaller of current and candidate; the change
       // flag marks a strict improvement (drives the next frontier)
-      state = state.join(stateJoin(cand, bcast), Seq("node"), "left")
+      state.join(stateJoin(cand, bcast), Seq("node"), "left")
         .select($"node" +:
           (ks.map(i => when(d(i).isNull, col(s"c$i"))
             .when(col(s"c$i").isNull, d(i))
@@ -842,18 +869,9 @@ object GraphOps {
               (d(i).isNull || col(s"c$i") < d(i))).as(s"g$i")) :+
             ks.map(i => col(s"c$i").isNotNull &&
               (d(i).isNull || col(s"c$i") < d(i))).reduce(_ || _).as("ga")): _*)
-        .ckpt
-      // the frontier count is the convergence short-circuit AND the
-      // round's materializing action — but at round == rounds the loop
-      // exits regardless, so that last count was a pure job barrier
-      // (r19 verdict item 3): skip it and let the final state's lazy
-      // checkpoint materialize inside the first downstream consumer's
-      // job (closeness_w's output scan / betweenness_w's sv broadcast
-      // build — later consumers read the same blocks).
-      active = if (round < rounds) state.filter($"ga").count() else 0L
-    }
+    }(_.filter($"ga").count() == 0)
     probe(round)
-    state.select($"node" +: ks.map(i => d(i)): _*)
+    dists.select($"node" +: ks.map(i => d(i)): _*)
   }
 
   /** Landmark closeness over WEIGHTED distance — the reference-parity
@@ -867,12 +885,11 @@ object GraphOps {
     * division is double.
     */
   def closenessW(u: DataFrame, k: Int = ClLandmarks, rounds: Int = ClWRounds,
-      stateBroadcast: Boolean = true,
       probe: (String, Int) => Unit = (_, _) => ()): DataFrame = {
     val s = u.sparkSession
     import s.implicits._
     val nodes = u.select($"node").distinct().ckpt
-    val bcast = stateBroadcast && stateHint(nodes.count())
+    val bcast = broadcastState(s, nodes.count())
     val lmkIds = landmarkSeed(u, k)
     val state = weightedDists(u, nodes, lmkIds, rounds, bcast,
       probe("relax", _))
@@ -911,12 +928,12 @@ object GraphOps {
     * broadcasts throughout.
     */
   def betweennessW(u: DataFrame, k: Int = BwLandmarks, rounds: Int = BwWRounds,
-      dagIters: Int = BwWDagIters, stateBroadcast: Boolean = true,
+      dagIters: Int = BwWDagIters,
       probe: (String, Int) => Unit = (_, _) => ()): DataFrame = {
     val s = u.sparkSession
     import s.implicits._
     val nodes = u.select($"node").distinct().ckpt
-    val bcast = stateBroadcast && stateHint(nodes.count())
+    val bcast = broadcastState(s, nodes.count())
     val lmkIds = landmarkSeed(u, k)
     val ks = lmkIds.indices
     val state = weightedDists(u, nodes, lmkIds, rounds, bcast,
@@ -949,39 +966,31 @@ object GraphOps {
     // counts DAG paths of one more hop; terms are non-negative), so the
     // per-column sums are a complete fixpoint probe: unchanged sums ⇒
     // no σ changed and no null became non-null ⇒ every later round is a
-    // no-op (matching the oracle's trailing statically-unrolled rounds).
-    // One cheap aggregate per round on the just-checkpointed state
-    // (r14 verdict item 6).
-    //
-    // Soundness guard (r15 ADVICE): monotonicity — and with it the
-    // probe's completeness — silently breaks if a Long σ wraps (path
-    // counts grow exponentially on dense DAGs; Spark wraps negative
-    // where DuckDB BIGINT errors), and wrapped positives and negatives
-    // can cancel inside a sum, faking an unchanged metric. The same
-    // aggregate therefore also reads each column's MIN (a wrap is
-    // negative at the row level) and the loop watches for any
-    // per-column sum DECREASE; either signal marks the probe unsound
-    // and the loop falls through to the full statically-unrolled
-    // dagIters — never an early exit on a corrupted metric.
-    def sigMetric(df: DataFrame): (Seq[java.math.BigDecimal], Boolean) = {
+    // no-op. Monotonicity silently breaks if a Long σ wraps (path counts
+    // grow exponentially on dense DAGs; Spark wraps negative where DuckDB
+    // BIGINT errors), and wrapped positives and negatives can cancel
+    // inside a sum, faking an unchanged metric. The same aggregate
+    // therefore also reads each column's MIN clamped at 0: a wrap is
+    // negative at the row level, so it reads as a DECREASE and turns the
+    // early exit off — never an exit on a corrupted metric.
+    def sigMetric(df: DataFrame): Seq[java.math.BigDecimal] = {
       val aggs = ks.map(i =>
         sum(col(s"s$i").cast("decimal(38,0)")).as(s"m$i")) ++
-        ks.map(i => min(col(s"s$i")).as(s"mn$i"))
+        ks.map(i => least(min(col(s"s$i")), lit(0L)).cast("decimal(38,0)").as(s"mn$i"))
       val r = df.agg(aggs.head, aggs.tail: _*).head()
-      val sums = ks.map(i =>
+      aggs.indices.map(i =>
         Option(r.getDecimal(i)).getOrElse(java.math.BigDecimal.ZERO))
-      val nonNeg = ks.forall(i =>
-        r.isNullAt(ks.length + i) || r.getLong(ks.length + i) >= 0L)
-      (sums, nonNeg)
     }
-    var sig = lmkFrame.select($"node" +:
+    val sig0 = lmkFrame.select($"node" +:
       ks.map(i => when($"node" === lmkIds(i), 1L).as(s"s$i")): _*).ckpt
-    var (sigPrev, sigSound) = sigMetric(sig)
-    var sigIt = 0
-    var sigFixed = false
-    while (sigIt < dagIters && !sigFixed) {
-      sigIt += 1
-      val prevS = sig.select($"node".as("v0") +: ks.map(i => col(s"s$i").as(s"ps$i")): _*)
+    // after the bound round the final σ materializes inside the first
+    // downstream broadcast build (sv2's), which leaves blocks for sw2. (A
+    // gap-2 batching of the metric — the pagerank pattern — was measured
+    // a wash here: when the fixpoint lands on an unchecked round the loop
+    // runs one extra full round, 62→62 jobs with tasks 287→307 and +5 MB
+    // shuffle; rejected.)
+    val (sig, sigIt) = Fixpoint.run(sig0, dagIters) { (prev, _) =>
+      val prevS = prev.select($"node".as("v0") +: ks.map(i => col(s"s$i").as(s"ps$i")): _*)
       // the K pinned marker rows (all-null contributions) ride INTO the
       // aggregate input, so a landmark node always has an output row to
       // pin — one hash aggregate, no re-densify join, no second read of
@@ -992,30 +1001,11 @@ object GraphOps {
         .union(lmkFrame.select($"node" +: ks.map(i =>
           lit(null).cast("long").as(s"c$i")): _*))
       val sAggs = ks.map(i => sum(col(s"c$i")).as(s"cs$i"))
-      sig = contrib.groupBy($"node")
+      contrib.groupBy($"node")
         .agg(sAggs.head, sAggs.tail: _*)
         .select($"node" +: ks.map(i =>
           when($"node" === lmkIds(i), 1L).otherwise(col(s"cs$i")).as(s"s$i")): _*)
-        .ckpt
-      // fixpoint/wrap metric at every round EXCEPT the bound (r19
-      // verdict item 3): at sigIt == dagIters the loop exits regardless
-      // and nothing after it reads the metric, so that round's action
-      // was a pure job barrier — skipping it folds the final σ
-      // materialization into the first downstream broadcast build
-      // (sv2's), which reads the lazy checkpoint once and leaves blocks
-      // for sw2. Per-round guard granularity on every exit-RELEVANT
-      // round is unchanged. (A gap-2 batching of the metric — the
-      // pagerank pattern — was A/B-measured a wash here: when the
-      // fixpoint lands on an unchecked round the loop runs one extra
-      // full round, 62→62 jobs with tasks 287→307 and +5 MB shuffle;
-      // rejected, r20.)
-      if (sigIt < dagIters) {
-        val (m, nonNeg) = sigMetric(sig)
-        if (!nonNeg || ks.exists(i => m(i).compareTo(sigPrev(i)) < 0))
-          sigSound = false
-        if (sigSound && m == sigPrev) sigFixed = true else sigPrev = m
-      }
-    }
+    }(Fixpoint.monotone(sig0)(sigMetric))
     probe("sigma", sigIt)
     // per-edge dependency ratio σv/σw per landmark (null when the edge is
     // not on landmark i's DAG or either σ is outside the σ bound)
@@ -1040,7 +1030,8 @@ object GraphOps {
     // prnd-quantized to 1e-9, and the metric compares the exact
     // floor(·1e9) integers — unchanged sums ⇒ the quantized state is
     // identical ⇒ every later round (and the output, which reads δ
-    // through the same quantization) is unchanged.
+    // through the same quantization) is unchanged; a decrease is
+    // corruption evidence (e.g. a divergent upstream σ).
     def dltMetric(df: DataFrame): Seq[java.math.BigDecimal] = {
       val aggs = ks.map(i =>
         sum(floor(coalesce(col(s"p$i"), lit(0.0)) * lit(1e9) + lit(0.5))
@@ -1048,36 +1039,17 @@ object GraphOps {
       val r = df.agg(aggs.head, aggs.tail: _*).head()
       ks.map(i => Option(r.getDecimal(i)).getOrElse(java.math.BigDecimal.ZERO))
     }
-    var dlt = lmkFrame.select($"node" +: ks.map(i => lit(0.0).as(s"p$i")): _*).ckpt
-    var dltPrev = dltMetric(dlt)
-    // δ shares σ's decrease guard: its quantized per-column sums are
-    // monotone non-decreasing (non-negative ratio terms), so any
-    // decrease is corruption evidence (e.g. a divergent upstream σ) —
-    // disable the short-circuit and run the full unroll (r15 ADVICE)
-    var dltSound = true
-    var dltIt = 0
-    var dltFixed = false
-    while (dltIt < dagIters && !dltFixed) {
-      dltIt += 1
-      val prevD = dlt.select($"node".as("w3") +: ks.map(i => col(s"p$i").as(s"wp$i")): _*)
+    val dlt0 = lmkFrame.select($"node" +: ks.map(i => lit(0.0).as(s"p$i")): _*).ckpt
+    // after the bound round the final δ materializes inside the output
+    // join's broadcast build
+    val (dlt, dltIt) = Fixpoint.run(dlt0, dagIters) { (prev, _) =>
+      val prevD = prev.select($"node".as("w3") +: ks.map(i => col(s"p$i").as(s"wp$i")): _*)
       val aggs = ks.map(i => P.dsum(P.prnd(
         col(s"rt$i") * (lit(1.0) + coalesce(col(s"wp$i"), lit(0.0))), 9), 9).as(s"cd$i"))
-      dlt = dagR.join(stateJoin(prevD, bcast), $"w" === $"w3", "left")
+      dagR.join(stateJoin(prevD, bcast), $"w" === $"w3", "left")
         .groupBy($"v").agg(aggs.head, aggs.tail: _*)
         .select($"v".as("node") +: ks.map(i => col(s"cd$i").as(s"p$i")): _*)
-        .ckpt
-      // bound-round metric skip, same argument as the σ loop above: the
-      // dagIters-th check can never trigger an exit and is read by
-      // nothing afterwards, so the final δ state materializes inside
-      // the output join's broadcast build instead of paying its own
-      // job barrier. Every exit-relevant round keeps its per-round
-      // decrease guard.
-      if (dltIt < dagIters) {
-        val m = dltMetric(dlt)
-        if (ks.exists(i => m(i).compareTo(dltPrev(i)) < 0)) dltSound = false
-        if (dltSound && m == dltPrev) dltFixed = true else dltPrev = m
-      }
-    }
+    }(Fixpoint.monotone(dlt0)(dltMetric))
     probe("delta", dltIt)
     // score: Σ over landmarks of δ through the exact floor(·1e9) integer
     // hop (row-wise long adds — associative), v ≠ source masked per
@@ -1100,28 +1072,23 @@ object GraphOps {
     * two-level aggregation ((node,label) then node) is map-side partial,
     * so each round's shuffle carries candidate-label rows, not edges.
     */
-  def communities(u: DataFrame, iters: Int = LpIters,
-      stateBroadcast: Boolean = true): DataFrame = {
+  def communities(u: DataFrame, iters: Int = LpIters): DataFrame = {
     val s = u.sparkSession
     import s.implicits._
-    var lbls = u.select($"node").distinct()
+    val lbls0 = u.select($"node").distinct()
       .select($"node", $"node".as("lbl")).ckpt
-    // same size discipline as [[pagerank]]: the count materializes the
-    // checkpointed seed labels (a job round 1 pays anyway) and |V|
-    // decides broadcast vs shuffled-hash for every round's state join
-    val bcast = stateBroadcast && stateHint(lbls.count())
-    for (_ <- 1 to iters) {
-      val votes = u
-        .join(stateJoin(lbls.select($"node".as("nb0"), $"lbl".as("nlbl")), bcast), $"nb" === $"nb0")
-        .groupBy($"node", $"nlbl").agg(sum($"weight").as("sc"))
+    // the count materializes the checkpointed seed labels (a job round 1
+    // pays anyway) and sizes the state joins
+    val bcast = broadcastState(s, lbls0.count())
+    Fixpoint.run(lbls0, iters) { (lbls, _) =>
       // min(struct(-score, label)) = the minimum label among the labels of
       // maximal summed weight — the same row the oracle's MAX/MIN pair picks
-      lbls = votes.groupBy($"node")
+      u.join(stateJoin(lbls.select($"node".as("nb0"), $"lbl".as("nlbl")), bcast), $"nb" === $"nb0")
+        .groupBy($"node", $"nlbl").agg(sum($"weight").as("sc"))
+        .groupBy($"node")
         .agg(min(struct((-$"sc").as("ns"), $"nlbl".as("l"))).as("m"))
         .select($"node", $"m.l".as("lbl"))
-        .ckpt
-    }
-    lbls.withColumnRenamed("lbl", "community")
+    }()._1.withColumnRenamed("lbl", "community")
   }
 
   // ------------------------------------------------------------ oracle SQL
@@ -1834,7 +1801,7 @@ object GraphOps {
     // anyway, and |V| drives the broadcast-vs-shuffled-hash choice for
     // every label join below — labels are a DATA-SCALING relation, so an
     // unconditional broadcast would be a driver OOM at 100 TB.
-    val bcast = stateHint(lbl.count())
+    val bcast = broadcastState(s, lbl.count())
     val tw = u.agg(sum($"weight").as("w2"))
     // the internal-weight join streams |E| once (no shuffle on the
     // broadcast path), and the per-community aggregate is map-side
@@ -1868,30 +1835,8 @@ object GraphOps {
     var sweep = 0
     while (sweep < cap && !converged) {
       sweep += 1
-      val ctot = lbl.join(deg, "node")
-        .groupBy($"community").agg(sum($"wdegree").as("wtot"))
-      val cand = u
-        .filter($"node" =!= $"nb")
-        .join(stateJoin(lbl.select($"node".as("nb2"), $"community".as("c")), bcast), $"nb" === $"nb2")
-        .select($"node", $"c", $"weight".as("wnc"))
-        .union(lbl.select($"node", $"community".as("c"), lit(0L).as("wnc")))
-        .groupBy($"node", $"c").agg(sum($"wnc").as("wnc"))
-      // argmax as a hash aggregate: min(struct(-score, own-last, c))
-      // picks the same row as the oracle's row_number over (score DESC,
-      // own-first, c) — map-side partials, no per-node sort
-      val mv = cand
-        .join(stateJoin(lbl.select($"node".as("n0"), $"community".as("a")), bcast), $"node" === $"n0")
-        .join(stateJoin(ctot.select($"community".as("c"), $"wtot"), bcast), "c")
-        .join(stateJoin(deg.select($"node".as("n1"), $"wdegree".as("dn")), bcast), $"node" === $"n1")
-        .crossJoin(broadcast(w2df))
-        .select($"node", $"a", $"c",
-          ($"w2" * $"wnc" - $"dn" *
-            ($"wtot" - when($"c" === $"a", $"dn").otherwise(lit(0L)))).as("score"))
-        .groupBy($"node", $"a")
-        .agg(min(struct((-$"score").as("ns"),
-          when($"c" === $"a", 0).otherwise(1).as("t"), $"c".as("l"))).as("m"))
-        .select($"node", $"a",
-          when($"m.l" < $"a", $"m.l").otherwise($"a").as("c"))
+      val mv = louvainMoves(u, deg, lbl, w2df, bcast)
+        .select($"node", $"a", when($"best" < $"a", $"best").otherwise($"a").as("c"))
         .ckpt
       // the one driver action per sweep — materializes the checkpoint
       // and decides convergence (a fixed point: zero moves ⇒ every
@@ -1904,15 +1849,51 @@ object GraphOps {
     (lbl, movedTotal, sweepsWithMoves)
   }
 
+  /** One simultaneous local-move evaluation over labels `lbl` (node,
+    * community): every node scores each NEIGHBORING community with the
+    * exact-BIGINT isolated-node gain 2m·w(n→c) − deg(n)·wtot'(c) and
+    * returns `(node, a, best)` — its current community and the argmax
+    * (ties → own community first, then the smallest id). The callers
+    * differ only in which moves they take: [[louvainSweepLoop]] clamps
+    * down, [[louvainSeededSweeps]] moves the seeded active half.
+    */
+  private def louvainMoves(u: DataFrame, deg: DataFrame, lbl: DataFrame,
+      w2df: DataFrame, bcast: Boolean): DataFrame = {
+    val s = u.sparkSession
+    import s.implicits._
+    val ctot = lbl.join(deg, "node")
+      .groupBy($"community").agg(sum($"wdegree").as("wtot"))
+    val cand = u
+      .filter($"node" =!= $"nb")
+      .join(stateJoin(lbl.select($"node".as("nb2"), $"community".as("c")), bcast), $"nb" === $"nb2")
+      .select($"node", $"c", $"weight".as("wnc"))
+      .union(lbl.select($"node", $"community".as("c"), lit(0L).as("wnc")))
+      .groupBy($"node", $"c").agg(sum($"wnc").as("wnc"))
+    // argmax as a hash aggregate: min(struct(-score, own-last, c))
+    // picks the same row as the oracle's row_number over (score DESC,
+    // own-first, c) — map-side partials, no per-node sort
+    cand
+      .join(stateJoin(lbl.select($"node".as("n0"), $"community".as("a")), bcast), $"node" === $"n0")
+      .join(stateJoin(ctot.select($"community".as("c"), $"wtot"), bcast), "c")
+      .join(stateJoin(deg.select($"node".as("n1"), $"wdegree".as("dn")), bcast), $"node" === $"n1")
+      .crossJoin(broadcast(w2df))
+      .select($"node", $"a", $"c",
+        ($"w2" * $"wnc" - $"dn" *
+          ($"wtot" - when($"c" === $"a", $"dn").otherwise(lit(0L)))).as("score"))
+      .groupBy($"node", $"a")
+      .agg(min(struct((-$"score").as("ns"),
+        when($"c" === $"a", 0).otherwise(1).as("t"), $"c".as("l"))).as("m"))
+      .select($"node", $"a", $"m.l".as("best"))
+  }
+
   /** Session-shared LPA labels (node, community) — consumed by the lv1
     * sweep seed, the seeded-schedule seed, and the quality panel's lpa
     * row: one LpIters run per (session, corpus), not one per consumer
     * (r17 review: the panel's cold path otherwise ran LPA twice
     * back-to-back — once for its own row, once inside lvSeedM's build).
     */
-  private def lpaM(s: SparkSession, dir: String, u: DataFrame,
-      bcast: Boolean): DataFrame =
-    MatStore.of(s, s"gr_lpa:$dir")(communities(u, stateBroadcast = bcast))
+  private def lpaM(s: SparkSession, dir: String, u: DataFrame): DataFrame =
+    MatStore.of(s, s"gr_lpa:$dir")(communities(u))
 
   /** Session-shared LEVEL-1 sweep result — the LPA-seeded constrained
     * sweep chain to convergence, consumed by BOTH [[grLouvain]] (which
@@ -1927,7 +1908,7 @@ object GraphOps {
       deg: DataFrame, bcast: Boolean, w2df: DataFrame): DataFrame = {
     import s.implicits._
     MatStore.of(s, s"gr_lv1:$dir") {
-      val lbl0 = lpaM(s, dir, u, bcast)
+      val lbl0 = lpaM(s, dir, u)
       val (lbl, moved, sweeps) =
         louvainSweepLoop(u, deg, lbl0, w2df, bcast, LvSweeps)
       lbl.select($"node", $"community",
@@ -1945,7 +1926,7 @@ object GraphOps {
     import s.implicits._
     val u = sharedUnd(s, dir)
     val deg = degrees(u).ckpt
-    val bcast = stateHint(deg.count())
+    val bcast = broadcastState(s, deg.count())
     val w2df = u.agg(sum($"weight").as("w2"))
     lv1M(s, dir, u, deg, bcast, w2df)
   }
@@ -2019,7 +2000,7 @@ object GraphOps {
     val deg = degrees(u).ckpt
     // ONE count action: materializes deg (a job the first sweep pays
     // anyway) and |V| drives every state-join choice below
-    val bcast = stateHint(deg.count())
+    val bcast = broadcastState(s, deg.count())
     val w2df = u.agg(sum($"weight").as("w2"))
     val lv1 = lv1M(s, dir, u, deg, bcast, w2df)
     val lbl = lv1.select($"node", $"community")
@@ -2064,35 +2045,16 @@ object GraphOps {
       lbl0: DataFrame, w2df: DataFrame, bcast: Boolean, sweeps: Int): DataFrame = {
     val s = u.sparkSession
     import s.implicits._
-    var lbl = lbl0
-    for (i <- 1 to sweeps) {
-      val ctot = lbl.join(deg, "node")
-        .groupBy($"community").agg(sum($"wdegree").as("wtot"))
-      val cand = u
-        .filter($"node" =!= $"nb")
-        .join(stateJoin(lbl.select($"node".as("nb2"), $"community".as("c")), bcast), $"nb" === $"nb2")
-        .select($"node", $"c", $"weight".as("wnc"))
-        .union(lbl.select($"node", $"community".as("c"), lit(0L).as("wnc")))
-        .groupBy($"node", $"c").agg(sum($"wnc").as("wnc"))
+    // one action per sweep, the last one included: materializes the
+    // checkpoint so six sweeps never stack into one deep lazy plan
+    val materialize = (lbl: DataFrame) => { lbl.count(); false }
+    val (lbl, _) = Fixpoint.run(lbl0, sweeps) { (prev, i) =>
       val active = P.hexToLong(
         md5(concat(lit("42:"), $"node".cast("string"), lit(s":$i"))), 1, 15) % 2 === 0
-      lbl = cand
-        .join(stateJoin(lbl.select($"node".as("n0"), $"community".as("a")), bcast), $"node" === $"n0")
-        .join(stateJoin(ctot.select($"community".as("c"), $"wtot"), bcast), "c")
-        .join(stateJoin(deg.select($"node".as("n1"), $"wdegree".as("dn")), bcast), $"node" === $"n1")
-        .crossJoin(broadcast(w2df))
-        .select($"node", $"a", $"c",
-          ($"w2" * $"wnc" - $"dn" *
-            ($"wtot" - when($"c" === $"a", $"dn").otherwise(lit(0L)))).as("score"))
-        .groupBy($"node", $"a")
-        .agg(min(struct((-$"score").as("ns"),
-          when($"c" === $"a", 0).otherwise(1).as("t"), $"c".as("l"))).as("m"))
-        .select($"node", when(active, $"m.l").otherwise($"a").as("community"))
-        .ckpt
-      // one action per sweep: materializes the checkpoint so six sweeps
-      // never stack into one deep lazy plan (the pagerank discipline)
-      lbl.count()
-    }
+      louvainMoves(u, deg, prev, w2df, bcast)
+        .select($"node", when(active, $"best").otherwise($"a").as("community"))
+    }(materialize)
+    materialize(lbl)
     lbl
   }
 
@@ -2168,7 +2130,7 @@ object GraphOps {
     import s.implicits._
     val u = sharedUnd(s, dir)
     val deg = degrees(u).ckpt
-    val bcast = stateHint(deg.count())
+    val bcast = broadcastState(s, deg.count())
     val w2df = u.agg(sum($"weight").as("w2"))
     val down = lv1M(s, dir, u, deg, bcast, w2df)
       .select($"node", $"community".as("c1"))
@@ -2289,7 +2251,7 @@ object GraphOps {
     import s.implicits._
     val u = sharedUnd(s, dir)
     val deg = degrees(u).ckpt
-    val bcast = stateHint(deg.count())
+    val bcast = broadcastState(s, deg.count())
     val w2df = u.agg(sum($"weight").as("w2"))
     val mm = mlMappingM(s, dir, u, deg, bcast, w2df)
     val meta = mm.agg(max($"n_moved").as("n_moved"), max($"n_levels").as("n_levels"))
@@ -2330,7 +2292,7 @@ object GraphOps {
         val cdeg = cund.groupBy($"node").agg(sum($"weight").as("wdegree")).ckpt
         // one count action per level: materializes the coarse relations
         // and sizes the level's state joins (coarse |V| = community count)
-        val cb = stateHint(cdeg.count())
+        val cb = broadcastState(s, cdeg.count())
         val init = cdeg.select($"node", $"node".as("community"))
         val (clbl, mvd, _) = louvainSweepLoop(cund, cdeg, init, w2df, cb, MlCoarseSweeps)
         coarseMoved += mvd
@@ -2361,7 +2323,7 @@ object GraphOps {
     import s.implicits._
     MatStore.of(s, s"gr_lvseed:$dir")(
       louvainSeededSweeps(u, deg,
-        lpaM(s, dir, u, bcast), w2df, bcast, LvSweeps))
+        lpaM(s, dir, u), w2df, bcast, LvSweeps))
   }
 
   /** One-row modularity report (n_communities, modularity) of a label
@@ -2447,12 +2409,12 @@ object GraphOps {
     import s.implicits._
     val u = sharedUnd(s, dir)
     val deg = degrees(u).ckpt
-    val bcast = stateHint(deg.count())
+    val bcast = broadcastState(s, deg.count())
     val w2df = u.agg(sum($"weight").as("w2"))
     def row(method: String, lbl: DataFrame): DataFrame =
       modularityOf(u, deg, lbl, w2df, bcast)
         .select(lit(method).as("method"), $"n_communities", $"modularity")
-    row("lpa", lpaM(s, dir, u, bcast)
+    row("lpa", lpaM(s, dir, u)
         .select($"node", $"community"))
       .union(row("louvain_down", lv1M(s, dir, u, deg, bcast, w2df)
         .select($"node", $"community")))
@@ -2713,7 +2675,7 @@ object GraphOps {
     // The closing edge side is data-scaling — never force-broadcast —
     // but |oe| is KNOWN here (the checkpoint blocks materialize on the
     // count), so the choice is size-driven exactly like the iteration
-    // state joins (stateHint + the stateBroadcast killswitch): while the
+    // state joins ([[broadcastState]]): while the
     // oriented edge set fits a broadcast, the |wedges|-row relation (the
     // dominant intermediate, Σd_out² rows — 10M at sf0.1, 88 MB through
     // the r12 exchange) never crosses a shuffle at all; past the
@@ -2722,7 +2684,7 @@ object GraphOps {
     // exchange at every scale.
     val closing = oe.select($"u".as("x"), $"v".as("y"))
     val close =
-      if (stateHint(oe.count()) && stateBroadcastAllowed(s)) broadcast(closing)
+      if (broadcastState(s, oe.count())) broadcast(closing)
       else closing.hint("shuffle_hash")
     // A Bloom pre-filter on the closing-edge key (guide §3.2) was built,
     // measured and REJECTED in r20 — do not re-try without new data.
@@ -2862,7 +2824,7 @@ object GraphOps {
       if (n == alive) done = true
       else {
         alive = n
-        val bcast = stateHint(n)
+        val bcast = broadcastState(s, n)
         // both endpoint filters against the |V|-scale keep set go through
         // the size-driven knob — never an unconditional broadcast
         cur = cur
@@ -2922,7 +2884,7 @@ object GraphOps {
     val deg = degrees(und).select($"node", $"degree").ckpt
     // the one driver action: materializes deg and sizes the state joins
     val n = deg.count()
-    val bcast = stateHint(n)
+    val bcast = broadcastState(s, n)
     val aj = und.select($"node", $"nb")
       .join(stateJoin(deg.select($"node".as("a0"), $"degree".as("du")), bcast), $"node" === $"a0")
       .join(stateJoin(deg.select($"node".as("b0"), $"degree".as("dv")), bcast), $"nb" === $"b0")
@@ -2990,25 +2952,29 @@ object GraphOps {
     import s.implicits._
     val u = sharedUnd(s, dir)
     val nodes = u.select($"node").distinct()
-    val bcast = stateHint(nodes.count())
+    val bcast = broadcastState(s, nodes.count())
     // Iteration state is (wid, cur) ONLY — the walk's path string is
     // functionally dependent on wid and would otherwise ride every
     // step's shuffle key, growing by a node id per round (the r11
-    // slowest-query defect). Each step instead logs its chosen hop
-    // (wid, t, v); the path assembles ONCE at the end from the step
-    // log — a single extra shuffle of WalkLen·|V| narrow int rows with
-    // a ≤WalkLen-element collect per walk (bounded map-side partials).
-    var st = nodes.select($"node".as("wid"), $"node".as("cur"))
+    // slowest-query defect). Each step's checkpointed hop (wid, t, v) is
+    // logged instead — by the next round, which reads it, and after the
+    // loop for the last one; the path assembles ONCE at the end from the
+    // step log — a single extra shuffle of WalkLen·|V| narrow int rows
+    // with a ≤WalkLen-element collect per walk (bounded map-side
+    // partials).
     val steps = Seq.newBuilder[DataFrame]
-    for (t <- 1 to WalkLen) {
+    def logHop(st: DataFrame, t: Int): Unit =
+      steps += st.select($"wid", lit(t).as("t"), $"cur".as("v"))
+    val (last, _) = Fixpoint.run(
+        nodes.select($"node".as("wid"), $"node".as("cur")), WalkLen) { (st, t) =>
+      if (t > 1) logHop(st, t - 1)
       val h = md5(concat($"wid".cast("string"), lit(s":$t:"), $"nb".cast("string")))
-      st = u.join(stateJoin(st, bcast), $"node" === $"cur")
+      u.join(stateJoin(st, bcast), $"node" === $"cur")
         .groupBy($"wid")
         .agg(min(struct(h.as("h"), $"nb".as("v"))).as("m"))
         .select($"wid", $"m.v".as("cur"))
-        .ckpt
-      steps += st.select($"wid", lit(t).as("t"), $"cur".as("v"))
-    }
+    }()
+    logHop(last, WalkLen)
     steps.result().reduce(_ unionAll _)
       .groupBy($"wid")
       .agg(array_sort(collect_list(struct($"t", $"v"))).as("hs"))

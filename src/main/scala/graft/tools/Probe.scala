@@ -30,41 +30,6 @@ object Probe {
     spark.stop()
   }
 }
-/** Dev-only: per-iteration pagerank timing at a given SF, mirroring the
-  * production algorithm (broadcast state + repartitioned cached norm +
-  * eager localCheckpoint) with per-phase prints.
-  */
-object PrProbe {
-  def main(args: Array[String]): Unit = {
-    val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val spark = graft.GraftSession.get(32)
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val t0 = System.nanoTime()
-    val und = graft.operators.GraphOps.undirected(graft.operators.GraphOps.edges(spark, dir))
-    val u = und.persist(); val nodes = u.select($"node").distinct().persist()
-    val n = nodes.count()
-    println(f"PRPROBE setup+nodes ${(System.nanoTime()-t0)/1e9}%6.2f n=$n")
-    val t1 = System.nanoTime()
-    val wdeg = u.groupBy($"node").agg(sum($"weight").as("wd"))
-    val norm = u.join(wdeg, "node").select($"node".as("src"), $"nb".as("dst"), ($"weight"/$"wd").as("p"))
-      .repartition($"src").persist()
-    println(f"PRPROBE norm ${norm.count()} rows parts=${norm.rdd.getNumPartitions} ${(System.nanoTime()-t1)/1e9}%6.2f")
-    var ranks = nodes.select($"node", (lit(1.0)/n).as("r")).localCheckpoint(true)
-    if (args.length > 1 && args(1) == "noaqe") spark.conf.set("spark.sql.adaptive.enabled", "false")
-    for (i <- 1 to 10) {
-      val t = System.nanoTime()
-      val contribs = norm.join(broadcast(ranks.withColumnRenamed("node", "src0")), $"src" === $"src0")
-        .groupBy($"dst").agg(sum($"r" * $"p").as("contrib"))
-      val next = contribs.select($"dst".as("node"), (lit(0.15)/n + lit(0.85)*$"contrib").as("r"))
-      val tPlan = System.nanoTime()
-      val ck = next.localCheckpoint(true)
-      ranks = ck
-      println(f"PRPROBE iter$i total=${(System.nanoTime()-t)/1e9}%6.2f ckpt=${(System.nanoTime()-tPlan)/1e9}%6.2f")
-    }
-    spark.stop()
-  }
-}
 /** Dev-only: plan-smell audit across every registered query. */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
@@ -93,42 +58,6 @@ object PlanDump {
     val df = graft.SparkEntry.queries(args(0))(spark, "/root/testdata/sf0.001")
     val p = df.queryExecution.executedPlan.toString
     p.split("\n").filter(l => l.contains("Join") || l.contains("Exchange") || l.contains("Scan") || l.contains("Cartesian")).foreach(l => println("PLANLINE " + l.take(200)))
-    spark.stop()
-  }
-}
-/** Dev-only: pagerank with checkpoint every K rounds instead of every
-  * round — measures whether fusing iterations cuts the per-round job
-  * latency floor without letting Catalyst re-analysis blow up.
-  */
-object PrFuseProbe {
-  def main(args: Array[String]): Unit = {
-    val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val every = if (args.length > 1) args(1).toInt else 2
-    val spark = graft.GraftSession.get(32)
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val t0 = System.nanoTime()
-    val und = graft.operators.GraphOps.undirected(graft.operators.GraphOps.edges(spark, dir))
-    val u = und.localCheckpoint(true)
-    val nodes = u.select($"node").distinct().localCheckpoint(true)
-    val n = nodes.count()
-    val wdeg = u.groupBy($"node").agg(sum($"weight").as("wd"))
-    val norm = u.join(wdeg, "node")
-      .select($"node".as("src"), $"nb".as("dst"), ($"weight"/$"wd").as("p"))
-      .repartition($"src").localCheckpoint(true)
-    println(f"PRFUSE setup ${(System.nanoTime()-t0)/1e9}%6.2f every=$every")
-    var ranks = nodes.select($"node", (lit(1.0)/n).as("r")).localCheckpoint(true)
-    val tAll = System.nanoTime()
-    for (i <- 1 to 10) {
-      val t = System.nanoTime()
-      val contribs = norm.join(broadcast(ranks.withColumnRenamed("node", "src0")), $"src" === $"src0")
-        .groupBy($"dst").agg(sum($"r" * $"p").as("contrib"))
-      val next = contribs.select($"dst".as("node"), (lit(0.15)/n + lit(0.85)*$"contrib").as("r"))
-      ranks = if (i % every == 0 || i == 10) next.localCheckpoint(true) else next
-      println(f"PRFUSE iter$i ${(System.nanoTime()-t)/1e9}%6.2f")
-    }
-    println(f"PRFUSE iterations total ${(System.nanoTime()-tAll)/1e9}%6.2f")
-    println("PRFUSE checksum " + ranks.agg(sum($"r")).head())
     spark.stop()
   }
 }
@@ -186,95 +115,6 @@ object PlansDoc {
         .groupBy($"dst").agg(sum($"r" * $"p").as("contrib"))
       println("===== pagerank_round =====")
       prRound.explain("formatted")
-    }
-    spark.stop()
-  }
-}
-/** Dev-only: compare shared graph-prefix shapes (edges→und materialization)
-  * and per-round iteration cost over each, plus the wdeg-join strategy.
-  */
-object UndProbe {
-  def main(args: Array[String]): Unit = {
-    val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val spark = graft.GraftSession.get(32)
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    def t[A](label: String)(f: => A): A = {
-      val t0 = System.nanoTime(); val r = f
-      println(f"UNDPROBE $label%-40s ${(System.nanoTime() - t0) / 1e9}%7.2f s"); r
-    }
-    // warm
-    graft.SparkEntry.queries("q1_pricing_summary")(spark, dir).count()
-
-    def rounds(u: org.apache.spark.sql.DataFrame, n: Int, label: String): Unit = {
-      var lbls = u.select($"node").distinct()
-        .select($"node", $"node".as("lbl")).localCheckpoint(true)
-      t(s"$label: $n rounds") {
-        for (_ <- 1 to n) {
-          val nb = u.join(broadcast(lbls.withColumnRenamed("node", "nb0")), $"nb" === $"nb0")
-            .select($"node", $"lbl")
-          lbls = nb.union(lbls).groupBy($"node").agg(min($"lbl").as("lbl")).localCheckpoint(true)
-        }
-      }
-    }
-
-    // A: current shape
-    val uA = t("A: ed.ckpt + union + repart(nb) + ckpt") {
-      val und = graft.operators.GraphOps.undirected(graft.operators.GraphOps.edges(spark, dir))
-      und.repartition($"nb").localCheckpoint(true)
-    }
-    println("UNDPROBE A parts=" + uA.rdd.getNumPartitions)
-    rounds(uA, 6, "A")
-
-    // B: single ckpt, union branches run twice in parallel
-    val uB = t("B: union(no inner ckpt) + repart(node) + ckpt") {
-      val e = graft.operators.GraphOps.edges(spark, dir)
-      e.select($"src".as("node"), $"dst".as("nb"), $"weight")
-        .union(e.select($"dst".as("node"), $"src".as("nb"), $"weight"))
-        .repartition($"node").localCheckpoint(true)
-    }
-    println("UNDPROBE B parts=" + uB.rdd.getNumPartitions)
-    rounds(uB, 6, "B")
-
-    // C: ed ckpt + union only (no 2nd materialization), iterate over union view
-    val uC = t("C: ed.ckpt + union (no 2nd ckpt)") {
-      graft.operators.GraphOps.undirected(graft.operators.GraphOps.edges(spark, dir))
-    }
-    println("UNDPROBE C parts=" + uC.rdd.getNumPartitions)
-    rounds(uC, 6, "C")
-
-    // D: union + ckpt, NO repartition — partitioning stays file-split
-    // shaped; tests whether the prefix exchange pays for itself
-    val uD = t("D: union + ckpt (no repart)") {
-      val e = graft.operators.GraphOps.edges(spark, dir)
-      e.select($"src".as("node"), $"dst".as("nb"), $"weight")
-        .union(e.select($"dst".as("node"), $"src".as("nb"), $"weight"))
-        .localCheckpoint(true)
-    }
-    println("UNDPROBE D parts=" + uD.rdd.getNumPartitions)
-    rounds(uD, 6, "D")
-
-    // E: lazy-ckpt variants of B and D (the production cadence)
-    val uE = t("E: B-shape lazy ckpt (materialized in round 1)") {
-      val e = graft.operators.GraphOps.edges(spark, dir)
-      e.select($"src".as("node"), $"dst".as("nb"), $"weight")
-        .union(e.select($"dst".as("node"), $"src".as("nb"), $"weight"))
-        .repartition($"node").localCheckpoint(false)
-    }
-    rounds(uE, 6, "E")
-
-    // wdeg join strategy over shape A
-    t("wdeg agg+join+repart+ckpt (auto)") {
-      val wdeg = uA.groupBy($"node").agg(sum($"weight").as("wd"))
-      uA.join(wdeg, "node")
-        .select($"node".as("src"), $"nb".as("dst"), ($"weight" / $"wd").as("p"))
-        .repartition($"src").localCheckpoint(true)
-    }
-    t("wdeg agg+join+ckpt (explicit bcast, no repart)") {
-      val wdeg = uA.groupBy($"node").agg(sum($"weight").as("wd"))
-      uA.join(broadcast(wdeg), "node")
-        .select($"node".as("src"), $"nb".as("dst"), ($"weight" / $"wd").as("p"))
-        .localCheckpoint(true)
     }
     spark.stop()
   }

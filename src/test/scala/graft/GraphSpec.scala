@@ -358,22 +358,50 @@ class GraphSpec extends GraftSuite {
     // match bitwise; double-valued states only up to shuffle-merge fp
     // reordering.
     val u = GraphOps.iterRelation(GraphOps.undirected(GraphOps.edgesNum(spark, sfDir)))
-    def byNode(df: org.apache.spark.sql.DataFrame, v: String): Map[Long, Double] =
+    def knobOff[T](body: => T): T = {
+      spark.conf.set("spark.graft.stateBroadcast", "false")
+      try body
+      finally spark.conf.set("spark.graft.stateBroadcast", "true")
+    }
+    def byNode(df: => org.apache.spark.sql.DataFrame, v: String): Map[Long, Double] =
       df.collect().map(r => r.getAs[Long]("node") -> r.getAs[Double](v)).toMap
     def close(a: Map[Long, Double], b: Map[Long, Double]): Unit = {
       assert(a.keySet === b.keySet)
       val worst = a.map { case (k, v) => math.abs(v - b(k)) }.max
       assert(worst < 1e-9, s"max path divergence $worst")
     }
-    close(byNode(GraphOps.pagerank(u, iters = 3, stateBroadcast = false), "r"),
-      byNode(GraphOps.pagerank(u, iters = 3, stateBroadcast = true), "r"))
-    close(byNode(GraphOps.eigenvector(u, iters = 2, stateBroadcast = false), "x"),
-      byNode(GraphOps.eigenvector(u, iters = 2, stateBroadcast = true), "x"))
-    def rows(df: org.apache.spark.sql.DataFrame) = df.orderBy("node").collect().toSeq
-    assert(rows(GraphOps.components(u, uncheckedRounds = 2, stateBroadcast = false)) ===
-      rows(GraphOps.components(u, uncheckedRounds = 2, stateBroadcast = true)))
-    assert(rows(GraphOps.communities(u, iters = 2, stateBroadcast = false)) ===
-      rows(GraphOps.communities(u, iters = 2, stateBroadcast = true)))
+    close(knobOff(byNode(GraphOps.pagerank(u, iters = 3), "r")),
+      byNode(GraphOps.pagerank(u, iters = 3), "r"))
+    close(knobOff(byNode(GraphOps.eigenvector(u, iters = 2), "x")),
+      byNode(GraphOps.eigenvector(u, iters = 2), "x"))
+    def rows(df: => org.apache.spark.sql.DataFrame) = df.orderBy("node").collect().toSeq
+    assert(knobOff(rows(GraphOps.components(u, uncheckedRounds = 2))) ===
+      rows(GraphOps.components(u, uncheckedRounds = 2)))
+    assert(knobOff(rows(GraphOps.communities(u, iters = 2))) ===
+      rows(GraphOps.communities(u, iters = 2)))
+  }
+
+  test("pagerank and closeness keep their per-run job counts") {
+    // Pins the number of Spark jobs a warm run of each query schedules,
+    // which fixes where every round's action and checkpoint sit: run 1
+    // may pay one-time builds; runs 2 and 3 must agree with each other
+    // and with the pinned count.
+    val sc = spark.sparkContext
+    def jobs(name: String, i: Int): Int = {
+      val group = s"jobpin:$name#$i"
+      spark.catalog.clearCache()
+      sc.setJobGroup(group, name)
+      try run(name).write.format("noop").mode("overwrite").save()
+      finally sc.clearJobGroup()
+      org.apache.spark.ListenerBusDrain(sc)
+      sc.statusTracker.getJobIdsForGroup(group).length
+    }
+    val pinned = Map("gr_pagerank" -> 21, "gr_closeness" -> 18)
+    val counts = pinned.keys.toSeq.sorted.map(name => name -> (1 to 3).map(jobs(name, _)))
+    for ((name, c) <- counts) {
+      assert(c(1) === c(2), s"$name: warm runs disagree: $c")
+      assert(c(1) === pinned(name), s"$name: $c jobs per run, pinned ${pinned(name)}")
+    }
   }
 
   test("graph stats: density in (0,1], clustering in [0,1], bounded sample") {

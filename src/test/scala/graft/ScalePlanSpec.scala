@@ -174,6 +174,33 @@ class ScalePlanSpec extends GraftSuite {
     }
   }
 
+  test("knob off: gr_pagerank partitions its cached norm relation on the join key") {
+    // with the state joins shuffled, norm must be hash-partitioned on
+    // `src` (the per-round JOIN key) so each round exchanges only the
+    // |V|-row state side; keyed by `dst` (the broadcast path's
+    // aggregation key) it re-exchanges |E| every round. The query's own
+    // plan ends at a checkpoint, so norm's cached physical plan is read
+    // from the persisted RDD's name.
+    def normPlan(): String = {
+      spark.catalog.clearCache()
+      run("gr_pagerank")
+      val norms = spark.sparkContext.getPersistentRDDs.values.map(_.name)
+        .filter(n => n != null && n.contains(" AS src#") && n.contains(" AS dst#")).toSeq
+      assert(norms.size === 1, s"expected one cached norm relation, got:\n${norms.mkString("\n")}")
+      norms.head
+    }
+    assert(normPlan().contains("Exchange hashpartitioning(dst"),
+      "broadcast path: norm should be partitioned on the aggregation key dst")
+    withKnobOff {
+      val plan = normPlan()
+      // src is the renamed join key node: the join's own exchange on
+      // node already partitions norm on src, so no dst re-exchange
+      assert(!plan.contains("hashpartitioning(dst") &&
+        plan.contains("Exchange hashpartitioning(node"),
+        s"shuffled path: norm is not partitioned on src:\n$plan")
+    }
+  }
+
   test("knob off: gr_modularity matches the broadcast-path result") {
     val on = run("gr_modularity").collect()
     val off = withKnobOff { run("gr_modularity").collect() }
